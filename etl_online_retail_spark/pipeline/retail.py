@@ -132,7 +132,13 @@ def run_pipeline(raw: DataFrame, warehouse_dir: str | None = None) -> RetailWare
     """Build the warehouse; optionally persist it as Parquet tables
     (the reference's load_* JDBC appends, S5). Parquet partitioning: the
     fact is written partitioned by the smart date key's year so the F5
-    range pattern prunes partitions at scale."""
+    range pattern prunes partitions at scale.
+
+    When persisted, the dim caches build_warehouse made for the fact's
+    lookups are released once the writes finish (a cache that outlived
+    the load pinned two dead relations per call), and the returned tables
+    read back the written Parquet, as the reference reads its loaded dims
+    back (etl.py:198-205); the fact drops its `_year` partition column."""
     from etl_online_retail_spark.operators.constraints import (
         fct_row_rules,
         observed_rules,
@@ -154,5 +160,19 @@ def run_pipeline(raw: DataFrame, warehouse_dir: str | None = None) -> RetailWare
          .withColumn("_year", (F.col("invoice_date_dim_id") / 10000).cast("int"))
          .write.mode("overwrite").partitionBy("_year")
          .parquet(f"{warehouse_dir}/fct_invoices"))
-        wh.load_metrics = fetch()
+        wh.dim_customers.unpersist()
+        wh.dim_products.unpersist()
+
+        def read_back(name: str, df: DataFrame) -> DataFrame:
+            # the built schema, not inference: an empty fact load writes
+            # no partition directory to infer from
+            return (raw.sparkSession.read.schema(df.schema)
+                    .parquet(f"{warehouse_dir}/{name}"))
+
+        return RetailWarehouse(
+            read_back("dim_customers", wh.dim_customers),
+            read_back("dim_products", wh.dim_products),
+            read_back("dim_dates", wh.dim_dates),
+            read_back("fct_invoices", wh.fct_invoices).drop("_year"),
+            fetch())
     return wh

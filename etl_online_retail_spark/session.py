@@ -50,6 +50,21 @@ _RUNTIME_CONFS = {
 }
 
 
+# Capacity of Catalyst's LRU cache of Janino-compiled generated classes
+# (spark.sql.codegen.cache.maxEntries, default 100), sized to the measured
+# working set (PERFORMANCE.md "Generated-code cache"): staging sf0.01 plus
+# one pass over the 241 benched queries compiles 2,901 distinct classes
+# (sampled generated source: mean 8.4 KB, p95 21.9 KB), and the benchmark's
+# etl_ingest workload about 500. At the default the cache evicts classes
+# before their next use, so steady-state requests recompile: 160 classes
+# (1.8 s of compile time) per CDC batch, ~3 per dashboard read. This is a
+# STATIC SQL conf: it takes effect only on the session builder, and Spark
+# reads it once per JVM, when the first class is compiled. It therefore
+# stays out of _RUNTIME_CONFS: setting it on a live session raises, and
+# ensure_session_confs would swallow that and leave the size unchanged.
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def default_parallelism() -> int:
     """CPU budget: $SPARK_GRAFT_CPUS in the harness, else all local cores."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -85,12 +100,27 @@ def get_spark(app_name: str = "etl-online-retail-spark",
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE_DIR",
                                "/tmp/spark-graft-warehouse"))
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, seconds compiling) so far in this JVM: the
+    sample count of CodegenMetrics' compilation-time histogram (one sample
+    per Janino compile, i.e. per codegen-cache miss) and CodeGenerator's
+    cumulative compile time, summed over threads."""
+    jvm = spark._jvm
+    n = (jvm.org.apache.spark.metrics.source.CodegenMetrics
+         .METRIC_COMPILATION_TIME().getCount())
+    ns = (jvm.org.apache.spark.sql.catalyst.expressions.codegen
+          .CodeGenerator.compileTime())
+    return n, ns / 1e9
 
 
 def cut_lineage(df):

@@ -28,7 +28,7 @@ reliable storage should set a checkpoint dir and use .checkpoint().
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -240,8 +240,13 @@ def partial_multi_agg_batch_write(batch_df: DataFrame, batch_id: int,
         aggs.append(F.sum(terms[vc]).cast(sum_type).alias("_sum" + vc[2:]))
     part = batch_df.groupBy(*key_cols).agg(*aggs)
     if weight_col is not None:
-        part = part.localCheckpoint(eager=True)
-        n_bad = (part.agg(F.sum("_bad_w")).collect()[0][0] or 0)
+        # the violation total rides the eager checkpoint as an observed
+        # metric, like dedup.duplicate_clusters' convergence probe: no
+        # second job just to sum `_bad_w`
+        obs = Observation()
+        part = (part.observe(obs, F.sum("_bad_w").alias("bad"))
+                .localCheckpoint(eager=True))
+        n_bad = obs.get["bad"] or 0
         if n_bad:
             raise ValueError(
                 f"weight column {weight_col!r} must be exactly +1 or -1 "

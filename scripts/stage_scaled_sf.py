@@ -21,7 +21,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -46,9 +46,34 @@ KEYS: dict[str, dict[str, int]] = {
 }
 
 
+# largest value each key dtype holds (other dtypes are refused)
+_DTYPE_MAX = {"int": 2**31 - 1, "bigint": 2**63 - 1}
+
+
+def check_key_range(df: DataFrame, factor: int,
+                    key_cols: dict[str, int]) -> None:
+    """Refuse a replication whose offset keys would not fit. Copy c adds
+    c x span to every key, so each source key must be below its span
+    (copies stay disjoint) and factor x span must fit the key's dtype:
+    the cast back to it would otherwise wrap silently (32-bit keys wrap
+    from factor 215 at SPAN = 10M)."""
+    dtypes = dict(df.dtypes)
+    top = df.agg(*[F.max(c).alias(c) for c in key_cols]).first()
+    for col, span in key_cols.items():
+        limit = _DTYPE_MAX.get(dtypes[col], -1)
+        if factor * span - 1 > limit:
+            raise ValueError(
+                f"{col} ({dtypes[col]}): {factor} copies x span {span:,} "
+                f"do not fit the key dtype")
+        if top[col] is not None and top[col] >= span:
+            raise ValueError(f"{col}: max key {top[col]:,} >= span "
+                             f"{span:,}, so copies would collide")
+
+
 def replicate(df: DataFrame, factor: int, key_cols: dict[str, int]) -> DataFrame:
     if not key_cols:  # dimension table: single copy
         return df
+    check_key_range(df, factor, key_cols)
     copies = df.crossJoin(F.broadcast(
         df.sparkSession.range(factor).withColumnRenamed("id", "_copy")))
     out = copies

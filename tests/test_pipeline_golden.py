@@ -127,3 +127,30 @@ def test_dashboard_golden_aggregates(warehouse):
          .filter(F.col("country").isNull())
          .agg(F.countDistinct("invoice_id").alias("n")).collect()[0].n)
     assert n == 1  # only 536369
+
+
+def test_persisted_run_releases_dim_caches(spark, tmp_path):
+    """A persisted run_pipeline releases the dim caches it made for the
+    fact's lookups (each load used to pin two dead cache entries for the
+    session) and returns tables read back from the written Parquet, equal
+    to the in-memory build's."""
+    from etl_online_retail_spark.pipeline.retail import run_pipeline
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def n_cached() -> int:
+        # entry count, not isEmpty: the session may cache other relations
+        return cm.cachedData().size()
+
+    before = n_cached()
+    raw = spark.createDataFrame(ROWS, RAW_SCHEMA)
+    wh = run_pipeline(raw, str(tmp_path / "wh"))
+    assert n_cached() == before
+    built = build_warehouse(raw)
+    for name in ("dim_customers", "dim_products", "dim_dates",
+                 "fct_invoices"):
+        got, want = getattr(wh, name), getattr(built, name)
+        assert got.columns == want.columns, name
+        assert sorted(got.collect()) == sorted(want.collect()), name
+    for name in ("dim_customers", "dim_products"):
+        getattr(built, name).unpersist()
