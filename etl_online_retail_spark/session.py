@@ -13,6 +13,7 @@ harness but overridable for a real cluster via env.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -61,8 +62,13 @@ _RUNTIME_CONFS = {
 # STATIC SQL conf: it takes effect only on the session builder, and Spark
 # reads it once per JVM, when the first class is compiled. It therefore
 # stays out of _RUNTIME_CONFS: setting it on a live session raises, and
-# ensure_session_confs would swallow that and leave the size unchanged.
+# ensure_session_confs would only warn and leave the size unchanged.
 CODEGEN_CACHE_ENTRIES = 4096
+
+# The checkout holding this package. Python workers get it on their path
+# (spark.executorEnv.PYTHONPATH): the JVM starts the worker daemon by module
+# name, from the driver's working directory, which need not be the checkout.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -79,6 +85,18 @@ def get_spark(app_name: str = "etl-online-retail-spark",
     overhead; on a real cluster callers pass an explicit value sized so
     post-shuffle partitions are ~128MB (AQE coalescing then trims).
     """
+    # Python worker daemon (spark.python.daemon.module, default
+    # pyspark.daemon): worker_daemon runs the stock daemon after patching
+    # zipimport so that the importlib.invalidate_caches() of every Python
+    # task re-reads the zips on the worker path (pyspark.zip, the py4j
+    # zip, the spark-core jar) only when they changed (PERFORMANCE.md
+    # "Python worker bootstrap"). Like
+    # CODEGEN_CACHE_ENTRIES it is a static conf, read when the JVM starts
+    # its first daemon, so it is set on the builder only and kept out of
+    # _RUNTIME_CONFS. Imported here, not at module level: the daemon runs
+    # the module as __main__ after importing this package.
+    from etl_online_retail_spark import worker_daemon
+
     cpus = default_parallelism()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
@@ -102,6 +120,8 @@ def get_spark(app_name: str = "etl-online-retail-spark",
                                "/tmp/spark-graft-warehouse"))
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", worker_daemon.__name__)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)
@@ -165,20 +185,23 @@ def run_concurrently(fn, items) -> None:
     their tail stages). Shared utility (promoted from matview's private
     helper, r11 advice): matview maintenance/publish and bench staging
     both use it. Single-item calls stay inline — identical semantics, no
-    pool overhead. Workers capped at 2x CPU count: the actions are
-    job-submission threads (the JVM does the work), but an unbounded
-    pool over a growing registry would thrash the scheduler. First
-    exception propagates after scheduled actions finish (pool shutdown
-    joins)."""
+    pool overhead. Workers capped at 2x the CPU budget
+    (default_parallelism): the actions are job-submission threads (the
+    JVM does the work), but an unbounded pool over a growing registry
+    would thrash the scheduler. First exception propagates after
+    scheduled actions finish (pool shutdown joins)."""
     items = list(items)
     if len(items) == 1:
         fn(items[0])
         return
     from concurrent.futures import ThreadPoolExecutor
 
-    workers = min(len(items), 2 * (os.cpu_count() or 4))
+    workers = min(len(items), 2 * default_parallelism())
     with ThreadPoolExecutor(max_workers=workers) as pool:
         list(pool.map(fn, items))
+
+
+_refused_confs: set[str] = set()  # keys ensure_session_confs warned about
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
@@ -186,13 +209,15 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
 
     The correctness driver hands us its own SparkSession; all confs in
     _RUNTIME_CONFS are runtime-settable SQL confs, so this is safe on any
-    live session.
+    live session. A conf the session refuses (an exotic build) is left
+    as it is, with a warning that names it, once per key per process.
     """
     for key, value in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            # A conf may be non-settable on exotic builds; queries that do
-            # not depend on it still work.
-            pass
+        except Exception as exc:
+            if key not in _refused_confs:
+                _refused_confs.add(key)
+                warnings.warn(f"session refused conf {key}={value}: {exc}",
+                              RuntimeWarning, stacklevel=2)
     return spark

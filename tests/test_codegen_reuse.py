@@ -62,7 +62,7 @@ def test_get_spark_sizes_the_codegen_cache(spark):
     key = "spark.sql.codegen.cache.maxEntries"
     assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)
     # a static conf: a live session refuses it, so ensure_session_confs
-    # (which swallows refusals) must not carry it
+    # (which only warns on a refusal) must not carry it
     with pytest.raises(Exception, match="CANNOT_MODIFY_STATIC_CONFIG"):
         spark.conf.set(key, "100")
     assert key not in _RUNTIME_CONFS
